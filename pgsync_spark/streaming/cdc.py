@@ -148,9 +148,12 @@ class TableMaterializer:
     """
 
     OVERLAY_FLAG = "__live"
-    # event-order metadata riding through the LWW fold; reserved names
-    # so a synced table's own columns can never collide with them
-    META_COLS = ("__cdc_txid", "__cdc_seq", "__cdc_sub")
+    # event-order metadata riding through the LWW fold, in window
+    # order; reserved names so a synced table's own columns can never
+    # collide with them. __cdc_batch ranks the previous overlay's rows
+    # (0) below every action of this batch (1) whatever their txids —
+    # a NULL or lower txid in a later batch must still win
+    META_COLS = ("__cdc_batch", "__cdc_txid", "__cdc_seq", "__cdc_sub")
     # overlays larger than this always trigger compaction regardless of
     # cadence (bounds the snapshot view's anti-join for big batches)
     OVERLAY_ROW_CAP = 65_536
@@ -172,10 +175,11 @@ class TableMaterializer:
         self._fold_exprs: dict[str, tuple] = {}
 
     def _fold_exprs_for(self, table: str, base: DataFrame) -> tuple:
-        """(pks, dead_cond, dead_sel, live_cond, live_sel, window) for
-        ``table`` — the event→overlay fold expressions, cached. The
+        """(dead_cond, dead_sel, live_cond, live_sel, prev_sel, window)
+        for ``table`` — the event→overlay fold expressions, cached. The
         dead/live selects fuse _typed_image's projection with the
-        overlay-shape projection (one Project; same resolved tree)."""
+        overlay-shape projection (one Project; same resolved tree);
+        prev_sel lifts the previous overlay into the fold's shape."""
         cached = self._fold_exprs.get(table)
         if cached is not None:
             return cached
@@ -188,7 +192,8 @@ class TableMaterializer:
             )
         pks = list(self.catalog.primary_key(table))
         dtypes = dict(base.dtypes)
-        meta = [F.col("txid").alias("__cdc_txid"), F.col("__cdc_seq")]
+        meta = [F.lit(1).alias("__cdc_batch"), F.col("txid").alias("__cdc_txid"),
+                F.col("__cdc_seq")]
         dead_sel = [
             F.col("old").getItem(c).cast(dtypes[c]).alias(c)
             if c in pks
@@ -199,15 +204,19 @@ class TableMaterializer:
             F.col("new").getItem(c).cast(dtypes[c]).alias(c)
             for c in base.columns
         ] + [F.lit(True).alias(flag), *meta, F.lit(1).alias("__cdc_sub")]
+        no_order = F.lit(None).cast("long")
+        prev_sel = [*base.columns, flag, F.lit(0).alias("__cdc_batch"),
+                    no_order.alias("__cdc_txid"), no_order.alias("__cdc_seq"),
+                    F.lit(0).alias("__cdc_sub")]
         w = Window.partitionBy(*pks).orderBy(
             *[F.col(c).desc() for c in self.META_COLS]
         )
         out = (
-            pks,
             F.col("op").isin(UPDATE, DELETE),
             dead_sel,
             F.col("op").isin(INSERT, UPDATE),
             live_sel,
+            prev_sel,
             w,
         )
         self._fold_exprs[table] = out
@@ -284,7 +293,8 @@ class TableMaterializer:
         LAST-WRITE-WINS semantics: each event contributes a *dead*
         action for its old-image PK (UPDATE/DELETE) and/or a *live*
         action carrying its new image (INSERT/UPDATE); the latest
-        action per key — ordered by txid, then in-batch sequence —
+        action per key — ordered by batch (a later apply always wins
+        over the previous overlay), then txid, then in-batch sequence —
         decides whether that key is a live overlay row or a tombstone.
         This matches the reference, which applies events in stream
         order (ref: pgsync/sync.py:1855-1888 run grouping), so
@@ -342,7 +352,7 @@ class TableMaterializer:
             snap = self.catalog.df(table)
             if table not in self._base:
                 self._base[table] = snap
-            pks, dead_cond, dead_sel, live_cond, live_sel, w = (
+            dead_cond, dead_sel, live_cond, live_sel, prev_sel, w = (
                 self._fold_exprs_for(table, self._base[table])
             )
             ev = events.filter(F.col("table") == table)
@@ -379,25 +389,20 @@ class TableMaterializer:
             # one UPDATE that keeps its key (the live image wins over
             # the removal of the same key by the same event). All
             # projection trees are prebuilt per table (_fold_exprs_for).
-            dead = ev.filter(dead_cond).select(*dead_sel)
-            live = ev.filter(live_cond).select(*live_sel)
-            # one window shuffle over a batch-sized frame: last action
-            # per key wins (LWW)
-            delta = (
-                dead.unionByName(live)
-                .withColumn("__cdc_rn", F.row_number().over(w))
+            actions = ev.filter(dead_cond).select(*dead_sel).unionByName(
+                ev.filter(live_cond).select(*live_sel)
+            )
+            if prev is not None:
+                # the previous overlay's rows join the fold as the
+                # oldest actions: a key this batch touches takes the
+                # batch's last action, an untouched key keeps its row
+                actions = prev.select(*prev_sel).unionByName(actions)
+            # one window shuffle: last action per key wins (LWW)
+            merged = (
+                actions.withColumn("__cdc_rn", F.row_number().over(w))
                 .filter(F.col("__cdc_rn") == 1)
                 .drop("__cdc_rn", *self.META_COLS)
             )
-            # ≤ 2 distinct keys per event (old pk + new pk)
-            if prev is not None:
-                merged = prev.join(
-                    maybe_broadcast(delta.select(*pks), known_rows=2 * n_ev),
-                    on=pks,
-                    how="left_anti",
-                ).unionByName(delta)
-            else:
-                merged = delta
             pending.append((table, n_ev, merged, prev))
         if not pending:
             return

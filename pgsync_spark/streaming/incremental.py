@@ -615,18 +615,22 @@ class IncrementalEngine:
     def _resolve_new_images(
         self, events: DataFrame, new_counts: dict[str, int]
     ) -> DataFrame | None:
-        """Affected root keys from INSERT/UPDATE new images, by joining
+        """Affected root keys from INSERT/UPDATE new images, by walking
         up the FK chains against the current snapshots.
 
         ``new_counts``: per-table INSERT/UPDATE event counts from the
         batch stats aggregation. Tables with zero new images skip their
         chains entirely — a batch touching only the root never scans a
         child snapshot here (the recompute reads children anyway, but
-        resolution must not). Every frame in a chain is bounded by its
-        table's event count (first hop distinct-selects from events;
-        child→parent hops are many-to-one), so the count guards each
-        broadcast: small batch → broadcast hint, bulk backfill → the
-        planner/AQE decides."""
+        resolution must not). Each hop is ``parent_snapshot ⋉
+        broadcast(keys)``: a left_semi join emits each parent row once
+        however many keys match it, so only the final union dedups.
+
+        The table's event count guards each broadcast (small batch →
+        hint, bulk backfill → the planner/AQE decides). It bounds the
+        keys only up to the first FK-on-parent or through-table edge:
+        those fan out (one customer reaches many orders), so past one a
+        high-fan-out rename can broadcast more keys than it assumes."""
         outs = []
         for table, chains in self._chains.items():
             n_events = new_counts.get(table, 0)
@@ -641,8 +645,7 @@ class IncrementalEngine:
                     vals = _typed_image(ev, "new", snap, self.root_pks)
                     outs.append(vals)
                     continue
-                first_child_cols = list(chain[0][0])
-                cur = _typed_image(ev, "new", snap, first_child_cols).dropDuplicates()
+                cur = _typed_image(ev, "new", snap, list(chain[0][0]))
                 for idx, (child_cols, parent_table, parent_cols) in enumerate(chain):
                     psnap = self.catalog.df(parent_table)
                     cond = None
@@ -650,16 +653,12 @@ class IncrementalEngine:
                         c = cur[cc] == psnap[pc]
                         cond = c if cond is None else (cond & c)
                     joined = psnap.join(
-                        maybe_broadcast(cur, known_rows=n_events), cond, "inner"
+                        maybe_broadcast(cur, known_rows=n_events), cond, "left_semi"
                     )
-                    if idx + 1 == len(chain):  # reached the root table
-                        cur = joined.select(
-                            *[psnap[c] for c in self.root_pks]
-                        ).dropDuplicates()
-                    else:  # next hop's child cols live on this parent
-                        cur = joined.select(
-                            *[psnap[c] for c in chain[idx + 1][0]]
-                        ).dropDuplicates()
+                    # the next hop's child cols live on this parent; the
+                    # last hop reaches the root table
+                    nxt = self.root_pks if idx + 1 == len(chain) else chain[idx + 1][0]
+                    cur = joined.select(*[psnap[c] for c in nxt])
                 outs.append(cur.toDF(*self.root_pks))
         if not outs:
             return None
@@ -741,6 +740,11 @@ class IncrementalEngine:
         ``timings``: pass a dict to accumulate per-phase wall-clock
         seconds (keyed by phase name) — first-class profiling, so
         benchmark/profiling harnesses never have to mirror this body.
+        Phases, in order: ``events_ckpt``; ``materializer`` (root
+        TRUNCATE only); ``resolve_build``; ``bronze_resolve_wave``
+        (bronze apply ∥ old-image docs ∥ new-image keys);
+        ``recompute_tree``; ``store_consumer_wave`` (doc/lineage store
+        overlays ∥ doc consumers). Early-exit batches stop sooner.
 
         ``txmin``/``txmax`` bound the transaction window: only events
         with ``txmin <= txid < txmax`` apply — the reference's snapshot
@@ -885,13 +889,14 @@ class IncrementalEngine:
         # so snapshots stay exact on unwatched columns
         active = events if n_total == n_active else events.filter(keep)
 
-        # ---- wave 1: bronze apply ∥ old-image ids ∥ new-image keys ---
+        # ---- wave 1: bronze apply ∥ old-image docs ∥ new-image keys --
         # All three depend only on the events checkpoint and PRE-batch
         # state, so they run as ONE concurrent wave of jobs instead of
         # three serial driver round-trips:
         #  - the materializer folds the batch into the bronze snapshots;
         #  - old images resolve against the lineage index (pre-batch by
-        #    construction);
+        #    construction) to the store docs they reach, whose root PKs
+        #    ride along as recompute keys;
         #  - new images resolve their FK chains against the PRE-batch
         #    snapshots. Exact by induction: an event whose ancestor
         #    chain crosses a row created in THIS batch is covered by
@@ -902,18 +907,33 @@ class IncrementalEngine:
         #    parents over-approximate, and recompute is idempotent.
         #    (The runner path, apply_snapshots=False, resolves against
         #    POST-batch snapshots — also exact, same argument.)
+        # Both resolve checkpoints count their rows via observe: the
+        # broadcast guards after the wave get exact sizes, no count job.
         ids_old = self._resolve_old_images(
             active,
             n_active,
             has_truncate=any_trunc,
             old_tables=old_tables,
         )
+        # a child TRUNCATE's lineage sweep can return the whole store:
+        # no event-derived bound exists, so no hint there
+        if not any_trunc:
+            ids_old = maybe_broadcast(ids_old, known_rows=n_active)
+        n_rows = F.count(F.lit(1)).alias("n")
+        old_obs, new_obs = Observation(), Observation()
+        old_docs = (
+            self.docs.join(ids_old, "_id", "left_semi")
+            .select("_id", *self.root_pks)
+            .observe(old_obs, n_rows)
+        )
         new_keys = self._resolve_new_images(active, new_counts)
+        if new_keys is not None:
+            new_keys = new_keys.observe(new_obs, n_rows)
         mark("resolve_build")
         wave: list = []
         # frames the materializer supersedes (prev overlays, compacted
-        # bases) must NOT unpersist mid-wave: the new_keys/ids jobs in
-        # this same wave scan the PRE-batch snapshot views, and a lost
+        # bases) must NOT unpersist mid-wave: the old-docs/new-keys jobs
+        # in this same wave scan the PRE-batch snapshot views, and a lost
         # localCheckpoint block is unrecoverable (no lineage). They
         # defer into batch_tmp and release with the other temporaries
         # after every consumer is done.
@@ -929,83 +949,40 @@ class IncrementalEngine:
                     defer_release=deferred,
                 )
             )
-        wave.append(lambda: ids_old.localCheckpoint(eager=True))
+        wave.append(lambda: old_docs.localCheckpoint(eager=True))
         if new_keys is not None:
             wave.append(lambda nk=new_keys: nk.localCheckpoint(eager=True))
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(len(wave)) as ex:
-            results = [f.result() for f in [ex.submit(t) for t in wave]]
+        results = _run_concurrently(wave)
         if apply_snapshots:
             results = results[1:]
         batch_tmp.extend(deferred)
-        ids = results[0]
-        batch_tmp.append(ids)
+        old_docs = results[0]
+        batch_tmp.append(old_docs)
+        n_touched = int(old_obs.get["n"])
+        # recompute keys and the stores' touched keys are lazy unions of
+        # the two wave checkpoints. New-key ids absent from the store
+        # (inserts) remove nothing there, so touching them is exact.
+        old_ids = old_docs.select("_id")
+        root_keys, touched = old_docs.select(*self.root_pks), old_ids
         if new_keys is not None:
             new_keys = results[-1]
             batch_tmp.append(new_keys)
+            n_touched += int(new_obs.get["n"])
+            new_ids = F.concat_ws("|", *[F.col(c).cast("string") for c in self.root_pks])
+            root_keys = root_keys.unionByName(new_keys)
+            touched = touched.unionByName(new_keys.select(new_ids.alias("_id")))
         mark("bronze_resolve_wave")
-
-        # broadcast guards below use event-derived UPPER BOUNDS instead
-        # of exact counts — each exact count is a driver sync point (a
-        # full Spark job), and an upper bound decides the broadcast the
-        # same way where it matters: a bulk backfill / child TRUNCATE
-        # makes the bound huge → shuffle path, a normal batch keeps it
-        # tiny → broadcast. n_new bound: every resolved root key traces
-        # to at least one INSERT/UPDATE event.
-        n_new = sum(new_counts.values()) if new_keys is not None else 0
-        if new_keys is not None:
-            key_ids = new_keys.select(
-                F.concat_ws("|", *[F.col(c).cast("string") for c in self.root_pks]).alias(
-                    "_id"
-                )
-            )
-            ids = ids.unionByName(key_ids)  # semi-join side: dupes harmless
-        # old-image ids ≤ n_active events ... except a child TRUNCATE,
-        # whose lineage sweep can return the whole store — no bound is
-        # knowable without counting, so count only then (cheap: ids is
-        # already checkpointed).
-        n_ids = ids.count() if any_trunc else n_active + n_new
-        mark("ids_count")
-
-        # ONE store materialization covers every downstream need: the
-        # affected ids that exist in the store, with their typed root
-        # PKs riding along, UNIONED with the new-image keys — a single
-        # checkpoint feeds both the store maintenance and the
-        # recompute. Ids absent from the store (new inserts)
-        # anti-remove nothing, so restricting the store anti-join side
-        # to the in-store subset is exact; recompute keys for new
-        # inserts ride in via the __new rows.
-        affected = self.docs.join(
-            maybe_broadcast(ids, known_rows=n_ids), "_id", "left_semi"
-        ).select("_id", *self.root_pks).withColumn("__new", F.lit(False))
-        if new_keys is not None:
-            affected = affected.unionByName(
-                new_keys.select(
-                    F.concat_ws(
-                        "|", *[F.col(c).cast("string") for c in self.root_pks]
-                    ).alias("_id"),
-                    *self.root_pks,
-                ).withColumn("__new", F.lit(True))
-            )
-        affected = affected.localCheckpoint(eager=True)
-        mark("affected_ckpt")
-        batch_tmp.append(affected)
-        n_affected = n_ids  # affected ⊆ ids ∪ new: same broadcast decision
-        affected_ids = affected.filter(~F.col("__new")).select("_id")
 
         # recompute those roots from the CURRENT snapshots (both inputs
         # checkpointed → the compiler's fan-out re-reads, never recomputes;
         # it dedups root_keys itself)
-        affected_keys = affected.select(*self.root_pks)
-
         from ..plans.sqlgen import compile_assembled
 
         combined_plan, cmeta = compile_assembled(
             self.catalog,
             self.tree,
-            root_keys=affected_keys,
-            root_keys_rows=n_affected + n_new,
+            root_keys=root_keys,
+            root_keys_rows=n_touched,
             include_pks=True,
             include_keys=True,
             scope=self._view_scope,
@@ -1021,31 +998,29 @@ class IncrementalEngine:
         batch_tmp.append(new_combined)
         self.stats["recomputed_docs"] += int(count_obs.get["n_docs"])
         mark("recompute_tree")
-        # store maintenance is O(batch + overlay): replace the affected
-        # keys' rows in each overlay store (a key whose doc did not
-        # recompute simply has no replacement rows — the implicit
-        # delete). New-insert ids ride in via the rows side; they were
-        # never in the base, so the touched-key anti-join is exact.
-        # Both stores' overlay checkpoints go out in ONE concurrent wave
-        # (4 serial driver round-trips → 1).
-        apply_overlays_parallel(
-            [
-                (self._docs_store, affected_ids, new_docs, n_affected),
-                (self._lineage_store, affected_ids, new_lineage, n_affected),
-            ]
-        )
-        mark("stores_overlay")
-        self._maybe_release_shared()
+
+        # ---- wave 2: store overlays ∥ doc consumers -------------------
+        # The consumers read only this batch's checkpoints (new_combined
+        # and the wave-1 outputs), never the stores the overlays
+        # rewrite, so both run concurrently.
+        # Store maintenance is O(batch + overlay): each store replaces
+        # the touched keys' rows (a key whose doc did not recompute has
+        # no replacement rows — the implicit delete).
+        stores = [
+            (self._docs_store, touched, new_docs, n_touched),
+            (self._lineage_store, touched, new_lineage, n_touched),
+        ]
+        wave = [lambda: apply_overlays_parallel(stores)]
         if self.doc_consumers:
             # the sink-facing doc DELTA: recomputed docs through the
             # tree's plugin chain (a plugin-dropped doc is simply not
             # re-indexed — the reference drops at indexing time too,
             # leaving whatever the sink held; ref: pgsync/sync.py:
-            # 1571-1572), plus the ids whose docs vanished (root row
-            # gone — the engine's implicit delete, made explicit for
-            # consumers). Both frames derive from this batch's eager
-            # checkpoints (new_combined / affected), so consumers run
-            # BEFORE the release below.
+            # 1571-1572), plus the ids whose docs vanished. Exact from
+            # the old-image ids alone: an existing doc that fails to
+            # recompute lost its root row in this batch, and that
+            # DELETE or PK change has an old image in the pre-batch
+            # lineage (a root TRUNCATE cleared the consumers above).
             ups = new_docs
             if self.plugins:
                 from ..plugin import apply_plugins
@@ -1058,13 +1033,31 @@ class IncrementalEngine:
                         c for c in ups.columns if c == "_routing"
                     ),
                 )
-            gone = affected_ids.join(
-                new_docs.select("_id"), "_id", "left_anti"
-            )
-            for consumer in self.doc_consumers:
-                consumer.apply(ups, gone)
-            mark("doc_consumers")
+            gone = old_ids.join(new_docs.select("_id"), "_id", "left_anti")
+
+            def consume() -> None:
+                for consumer in self.doc_consumers:
+                    consumer.apply(ups, gone)
+
+            wave.append(consume)
+        _run_concurrently(wave)
+        self._maybe_release_shared()
+        mark("store_consumer_wave")
         # overlay checkpoints are eager — every batch temporary
-        # (events, resolved keys, affected set, recompute output) is
-        # fully copied out; free the blocks now
+        # (events, resolved keys, recompute output) is fully copied
+        # out, and every consumer is done; free the blocks now
         caching.release_local_checkpoints(batch_tmp)
+
+
+def _run_concurrently(tasks: list) -> list:
+    """Run independent thunks as one concurrent wave of Spark jobs
+    (one driver round-trip instead of len(tasks) serial ones); returns
+    their results in order. Waits for every task, then re-raises the
+    first error."""
+    if len(tasks) == 1:
+        return [tasks[0]()]
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(len(tasks)) as ex:
+        futures = [ex.submit(t) for t in tasks]
+    return [f.result() for f in futures]

@@ -488,6 +488,86 @@ def test_lww_delete_then_reinsert_lives(spark, engine):
     )
 
 
+def _cdc_rows(spark, rows):
+    """CDC frame from (op, table, old, new, txid) tuples; txid may be
+    None, which payloads_from_rows cannot express."""
+    from pgsync_spark.streaming.cdc import CDC_SCHEMA
+
+    return spark.createDataFrame(
+        [
+            (op, "public", table, {k: str(v) for k, v in (old or {}).items()},
+             {k: str(v) for k, v in (new or {}).items()}, txid)
+            for op, table, old, new, txid in rows
+        ],
+        CDC_SCHEMA,
+    )
+
+
+@pytest.mark.parametrize("later_txid", [5, None])
+def test_lww_later_batch_beats_prev_overlay(spark, later_txid):
+    """Across micro-batches the LATER batch wins for a key, even when its
+    txid is lower than, or NULL next to, the txid that wrote the
+    previous overlay row: the fold ranks the previous overlay below
+    every action of the new batch, and txid order only decides within
+    a batch."""
+    from pgsync_spark.streaming.cdc import TableMaterializer
+
+    cat = Catalog(spark, SF_DIR)
+    mat = TableMaterializer(cat, compact_every=99)
+    row = _order_row(cat, 7)
+
+    def prio(key):
+        got = cat.df("orders").filter(F.col("o_orderkey") == key).collect()
+        return [r["o_orderpriority"] for r in got]
+
+    mat.apply(_cdc_rows(spark, [
+        ("UPDATE", "orders", {"o_orderkey": 7}, dict(row, o_orderpriority="FIRST"), 100),
+        ("DELETE", "orders", {"o_orderkey": 9}, None, 100),
+    ]))
+    assert prio(7) == ["FIRST"] and prio(9) == []
+    mat.apply(_cdc_rows(spark, [
+        ("UPDATE", "orders", {"o_orderkey": 7},
+         dict(row, o_orderpriority="SECOND"), later_txid),
+        ("INSERT", "orders", None,
+         dict(row, o_orderkey=9, o_orderpriority="BACK"), later_txid),
+    ]))
+    # the later batch's image replaces the overlay row (one row, not
+    # two) and its re-insert revives the tombstoned key
+    assert prio(7) == ["SECOND"]
+    assert prio(9) == ["BACK"]
+    mat.release()
+
+
+def test_lww_update_delete_reinsert_across_batches(spark, engine):
+    """UPDATE → next-batch DELETE → next-batch re-INSERT of one root
+    key, with falling txids: after each batch the snapshot holds the
+    latest batch's state and the docs equal a full recompute."""
+    tree = schemas.tree("orders_full")
+    row = _order_row(engine.catalog, 15)
+
+    def state():
+        rows = engine.catalog.df("orders").filter(F.col("o_orderkey") == 15).collect()
+        docs = engine.docs.filter(F.col("_id") == "15").collect()
+        assert _docs_equal(engine.docs, _full_recompute(spark, engine, tree))
+        return [r["o_orderpriority"] for r in rows], [d["doc"] for d in docs]
+
+    engine.process_batch(_cdc_rows(spark, [
+        ("UPDATE", "orders", {"o_orderkey": 15},
+         dict(row, o_orderpriority="U-ONE"), 300),
+    ]))
+    prios, docs = state()
+    assert prios == ["U-ONE"] and len(docs) == 1 and "U-ONE" in docs[0]
+    engine.process_batch(_cdc_rows(spark, [
+        ("DELETE", "orders", {"o_orderkey": 15}, None, 200),
+    ]))
+    assert state() == ([], [])
+    engine.process_batch(_cdc_rows(spark, [
+        ("INSERT", "orders", None, dict(row, o_orderpriority="I-THREE"), None),
+    ]))
+    prios, docs = state()
+    assert prios == ["I-THREE"] and len(docs) == 1 and "I-THREE" in docs[0]
+
+
 @pytest.mark.slow
 def test_overlay_size_cap_triggers_compaction(spark, engine):
     """A batch that outgrows OVERLAY_ROW_CAP compacts immediately even
@@ -979,3 +1059,108 @@ def test_random_event_sequences_match_full_recompute(spark, seed):
             f"seed={seed} batch={_batch} events={events}"
         )
     eng._teardown_stores()
+
+
+def _four_table_batch(catalog, txid, step):
+    """One mixed batch over every orders_full table, shaped like a
+    steady CDC batch: a new order with a lineitem, root UPDATEs, a root
+    DELETE cascading to its lineitems, a lineitem UPDATE, a customer
+    rename and a nation rename. ``step`` picks distinct keys per
+    batch."""
+
+    def rows(table, cond):
+        return [r.asDict() for r in catalog.df(table).filter(cond).collect()]
+
+    doomed = 40 + step * 4
+    upd = rows("orders", F.col("o_orderkey").isin(3 + step * 4, 5 + step * 4))
+    li = rows("lineitem", F.col("l_orderkey") == doomed)
+    li_upd = rows("lineitem", F.col("l_orderkey") == 70 + step * 4)[0]
+    cust = rows("customer", F.col("c_custkey") == 10 + step)[0]
+    nat = rows("nation", F.col("n_nationkey") == step)[0]
+    new_key = 990_000 + step
+    ev = [
+        {"op": "INSERT", "table": "orders",
+         "new": dict(upd[0], o_orderkey=new_key), "txid": txid},
+        {"op": "INSERT", "table": "lineitem",
+         "new": dict(li_upd, l_orderkey=new_key), "txid": txid},
+        {"op": "DELETE", "table": "orders",
+         "old": {"o_orderkey": doomed}, "txid": txid},
+        {"op": "UPDATE", "table": "lineitem",
+         "old": {"l_orderkey": li_upd["l_orderkey"],
+                 "l_linenumber": li_upd["l_linenumber"]},
+         "new": dict(li_upd, l_quantity=99.0), "txid": txid},
+        {"op": "UPDATE", "table": "customer",
+         "old": {"c_custkey": cust["c_custkey"]},
+         "new": dict(cust, c_name=f"STEADY-{step}"), "txid": txid},
+        {"op": "UPDATE", "table": "nation",
+         "old": {"n_nationkey": nat["n_nationkey"]},
+         "new": dict(nat, n_name=f"NATION-{step}"), "txid": txid},
+    ]
+    ev += [
+        {"op": "UPDATE", "table": "orders", "old": {"o_orderkey": r["o_orderkey"]},
+         "new": dict(r, o_orderpriority=f"P-{step}"), "txid": txid}
+        for r in upd
+    ]
+    ev += [
+        {"op": "DELETE", "table": "lineitem",
+         "old": {"l_orderkey": r["l_orderkey"], "l_linenumber": r["l_linenumber"]},
+         "txid": txid}
+        for r in li
+    ]
+    return ev
+
+
+def test_steady_batch_job_budget(spark):
+    """A steady mixed batch (4 touched tables, prior overlays present,
+    one BM25 consumer) runs at most JOB_BUDGET Spark jobs. Jobs are
+    counted by job-id range rather than job group: the engine submits
+    from thread pools, whose jobs carry no group. The count pins the
+    per-batch fixed cost; it is not exact run to run, because whether a
+    broadcast runs as its own job depends on how the concurrent waves'
+    queries interleave (57-60 over 14 runs), hence the headroom."""
+    from pgsync_spark.functions.bm25_index import BM25Index
+    from pgsync_spark.streaming import SearchIndexMaintainer
+
+    JOB_BUDGET = 62
+    tree = schemas.tree("orders_full")
+    eng = IncrementalEngine(spark, tree, Catalog(spark, SF_DIR))
+    eng.full_sync()
+    idx = BM25Index(spark)
+    maint = SearchIndexMaintainer(
+        idx, text_expr="get_json_object(doc, '$.customer.c_name')"
+    )
+    maint.seed(eng.docs_for_sink())
+    eng.doc_consumers.append(maint)
+    # warm-up batch: every touched table then has a prior overlay
+    eng.process_batch(payloads_from_rows(spark, _four_table_batch(eng.catalog, 10, 1)))
+    events = payloads_from_rows(spark, _four_table_batch(eng.catalog, 11, 2))
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first = dag.nextJobId()
+    eng.process_batch(events)
+    n_jobs = dag.nextJobId() - first
+    assert n_jobs <= JOB_BUDGET, n_jobs
+    assert _docs_equal(eng.docs, _full_recompute(spark, eng, tree))
+    idx.close()
+    eng._teardown_stores()
+
+
+def test_consumer_error_propagates_from_store_wave(spark, engine):
+    """Doc consumers run concurrently with the store overlays; an error
+    raised by a consumer still reaches process_batch's caller."""
+
+    class Failing:
+        def apply(self, upserts, deleted_ids):
+            raise RuntimeError("consumer down")
+
+        def truncate(self):
+            pass
+
+    engine.doc_consumers.append(Failing())
+    row = _order_row(engine.catalog, 7)
+    ev = payloads_from_rows(
+        spark,
+        [{"op": "UPDATE", "table": "orders", "old": {"o_orderkey": 7},
+          "new": dict(row, o_orderpriority="X"), "txid": 1}],
+    )
+    with pytest.raises(RuntimeError, match="consumer down"):
+        engine.process_batch(ev)
